@@ -394,7 +394,7 @@ def main() -> None:
         # 250-entry per-query map — so every run must leave a
         # self-describing per-query artifact in the repo. `cpus` +
         # `ts` make runs distinguishable in the append-only log.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1),
         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "batch_value": round(total - streaming, 4),
         "streaming_value": streaming,

@@ -479,13 +479,9 @@ class Engine:
                 )
             check_system_catalog_write(sql)
         except Exception as exc:
-            elapsed = (time.perf_counter() - t_start) * 1000
-            self.query_log.record(session_id, sql, "denied", elapsed)
             self.instr.statement(
                 session_id, sql, "execute_sql", False, str(exc))
-            self.access_log.record(
-                "execute_sql", identity=st.username, status="DENIED",
-                duration_ms=elapsed, detail=sql)
+            self._record(st, "denied", t_start, sql=sql)
             raise
         # ATTACH/DETACH of remote Flight engines (adbc_scanner analog;
         # reaches here only for admins — the admin gate above blocks
@@ -494,8 +490,7 @@ class Engine:
         if att is not None:
             alias, uri, user, pw = att
             st.attached[alias] = (uri, user, pw)
-            self.query_log.record(
-                session_id, sql, "ok", (time.perf_counter() - t_start) * 1000)
+            self._record(st, "ok", t_start, sql=sql)
             return StatementResult("set", info={"attached": alias})
         det = parse_detach(sql)
         if det is not None and det in st.attached:
@@ -514,15 +509,8 @@ class Engine:
                 result = self._run_statement(st, sql)
                 sp.set_attribute("statement.kind", result.kind)
         except Exception as exc:
-            elapsed = (time.perf_counter() - t_start) * 1000
-            self.query_log.record(session_id, sql, "error", elapsed)
-            self.instr.execution(
-                stmt_id, "error", duration_ms=elapsed, error=str(exc))
-            self.access_log.record(
-                "execute_sql", identity=st.username, status="ERROR",
-                duration_ms=elapsed, detail=sql)
-            self.telemetry.add_counter(
-                "engine.statements_total", status="error")
+            self._record(st, "error", t_start, sql=sql, stmt_id=stmt_id,
+                         error=str(exc))
             raise
         if write_target is not None:
             # keep the persistent manifest in step with catalog writes
@@ -535,22 +523,44 @@ class Engine:
                 # forgotten above); record the NEW name so the files
                 # survive a restart under it
                 self.warehouse.record(st.spark, ren.group(1).strip("`"))
-        elapsed = (time.perf_counter() - t_start) * 1000
-        self.query_log.record(session_id, sql, "ok", elapsed)
         result.statement_id = stmt_id
         result.trace_id = sp.trace_id
         result.root_span_id = sp.span_id
-        if result.kind != "query":
-            # eager statements executed inside _run_statement; lazy
-            # queries record their execution when collected
-            self.instr.execution(
-                stmt_id, "success", duration_ms=elapsed,
-                rows_fetched=result.affected_rows)
-        self.access_log.record(
-            "execute_sql", identity=st.username, status="OK",
-            duration_ms=elapsed, detail=sql)
-        self.telemetry.add_counter("engine.statements_total", status="ok")
+        # eager statements executed inside _run_statement; lazy
+        # queries record their execution when materialized
+        self._record(st, "ok", t_start, sql=sql,
+                     stmt_id=None if result.kind == "query" else stmt_id,
+                     rows=result.affected_rows)
         return result
+
+    def _record(self, st: SessionState, status: str, t0: float, *,
+                sql: str | None = None, stmt_id: str | None = None,
+                queue_wait_ms: float = 0.0, rows: int | None = None,
+                error: str | None = None) -> None:
+        """The statement path's one sink writer; elapsed time runs from
+        ``t0``. An ``execute_sql`` exit passes its ``sql`` and status
+        ("ok" | "error" | "denied"): query log, access log and the
+        ``engine.statements_total`` counter. A materialize passes no
+        sql, and its fetched ``rows`` feed
+        ``engine.rows_fetched_total``. A ``stmt_id`` adds an execution
+        row ("ok" is recorded as "success")."""
+        elapsed = (time.perf_counter() - t0) * 1000
+        if sql is not None:
+            self.query_log.record(st.session_id, sql, status, elapsed)
+            self.access_log.record(
+                "execute_sql", identity=st.username, status=status.upper(),
+                duration_ms=elapsed, detail=sql)
+        if stmt_id is not None:
+            self.instr.execution(
+                stmt_id, "success" if status == "ok" else status,
+                queue_wait_ms=queue_wait_ms, duration_ms=elapsed,
+                rows_fetched=rows, error=error)
+        if sql is not None or rows is not None:
+            name, value, labels = (
+                ("engine.statements_total", 1.0, {"status": status})
+                if sql is not None
+                else ("engine.rows_fetched_total", float(rows), {}))
+            self.telemetry.add_counter(name, value, **labels)
 
     def enable_catalog_logging(self, path: str | None = None,
                                queue_max: int = 1000):
@@ -1203,73 +1213,86 @@ class Engine:
 
     def collect(self, session_id: str, result: StatementResult,
                 timeout: float | None = None) -> list:
-        """Materialize under admission control + timeout watchdog
-        (duckdb_statement.cpp:1956-2038 admission; :2042-2192 async
-        execute + interrupt)."""
-        st = self._session(session_id)
+        """Materialize a query's rows through the single statement
+        lifecycle (``_materialize``): ``execute_sql`` traced the
+        statement as ``statement.execute``; this adds one child
+        ``statement.collect`` span covering admission queue wait plus
+        materialization, and one execution row, under the session's
+        timeout and cancel."""
+        return self._materialize(
+            self._session(session_id), result, lambda df: df.collect(),
+            len, timeout)
+
+    def _materialize(self, st: SessionState, result: StatementResult,
+                     action, count, timeout: float | None = None):
+        """Run ``action(result.df)`` under admission control and a
+        timeout watchdog (duckdb_statement.cpp:1956-2038 admission;
+        :2042-2192 async execute + interrupt); the one materialize path
+        of ``collect`` and ``collect_arrow``. The ``statement.collect``
+        span covers queue wait plus materialization and is parented on
+        the statement's ``statement.execute`` span; the execution row
+        and counters go through ``_record`` with ``count(value)`` rows.
+        A run past the timeout raises ``StatementTimeout``; one whose
+        jobs were cancelled (cancel, KILL) raises
+        ``StatementCancelled``."""
         if timeout is None:
-            timeout = float(st.settings.get("engine.query_timeout", self.global_settings) or 0)
+            timeout = float(st.settings.get(
+                "engine.query_timeout", self.global_settings) or 0)
         bypass = bool(st.settings.get("engine.bypass_queue", self.global_settings))
-        t_enqueue = time.perf_counter()
-        if not bypass:
-            self._admission.acquire()
-        queue_wait_ms = (time.perf_counter() - t_enqueue) * 1000
-        t_exec = time.perf_counter()
-        st.statement_seq += 1
-        group = st.session_id
         sc = self.spark.sparkContext
         out: dict[str, Any] = {}
-
-        def _run():
-            sc.setJobGroup(group, f"stmt-{st.statement_seq}", interruptOnCancel=True)
-            try:
-                out["rows"] = result.df.collect()
-            except Exception as e:  # surfaced below
-                out["error"] = e
-
-        def _record(status: str, rows: int | None = None,
-                    error: str | None = None) -> None:
-            if result.statement_id is not None:
-                self.instr.execution(
-                    result.statement_id, status, queue_wait_ms=queue_wait_ms,
-                    duration_ms=(time.perf_counter() - t_exec) * 1000,
-                    rows_fetched=rows, error=error)
-            # child span onto the statement's trace (collect phase)
-            with self.telemetry.span(
+        with self.telemetry.span(
                 "statement.collect", trace_id=result.trace_id,
-                parent_id=result.root_span_id, session=st.session_id,
-                queue_wait_ms=queue_wait_ms) as sp:
-                sp.set_attribute("status", status)
-                if rows is not None:
-                    sp.set_attribute("rows", rows)
-                if error is not None:
-                    sp.set_error(error)
-            if rows is not None:
-                self.telemetry.add_counter(
-                    "engine.rows_fetched_total", float(rows))
-
-        try:
-            worker = threading.Thread(target=_run, daemon=True)
-            worker.start()
-            worker.join(timeout if timeout and timeout > 0 else None)
-            if worker.is_alive():
-                sc.cancelJobGroup(group)
-                worker.join(10)
-                _record("timeout", error=f"exceeded {timeout}s")
-                raise StatementTimeout(f"statement exceeded {timeout}s")
-        finally:
+                parent_id=result.root_span_id, session=st.session_id) as sp:
+            t_enqueue = time.perf_counter()
             if not bypass:
-                self._admission.release()
-        if "error" in out:
-            err = out["error"]
-            if st.killed or "cancelled" in str(err).lower():
-                _record("cancelled", error=str(err))
-                raise StatementCancelled(str(err))
-            _record("error", error=str(err))
-            raise err
-        self._maybe_capture_profile(st, result)
-        _record("success", rows=len(out["rows"]))
-        return out["rows"]
+                self._admission.acquire()
+            t_exec = time.perf_counter()
+            queue_wait_ms = (t_exec - t_enqueue) * 1000
+            sp.set_attribute("queue_wait_ms", queue_wait_ms)
+            st.statement_seq += 1
+            seq = st.statement_seq
+
+            def _run():
+                sc.setJobGroup(st.session_id, f"stmt-{seq}",
+                               interruptOnCancel=True)
+                try:
+                    out["value"] = action(result.df)
+                except Exception as e:  # surfaced below
+                    out["error"] = e
+
+            try:
+                worker = threading.Thread(target=_run, daemon=True)
+                worker.start()
+                worker.join(timeout if timeout > 0 else None)
+                timed_out = worker.is_alive()
+                if timed_out:
+                    sc.cancelJobGroup(st.session_id)
+                    worker.join(10)
+            finally:
+                if not bypass:
+                    self._admission.release()
+            err = out.get("error")
+            if timed_out:
+                status = "timeout"
+                err = StatementTimeout(f"statement exceeded {timeout}s")
+            elif err is None:
+                status = "success"
+            elif st.killed or "cancelled" in str(err).lower():
+                status, err = "cancelled", StatementCancelled(str(err))
+            else:
+                status = "error"
+            rows = None if err is not None else count(out["value"])
+            if rows is not None:
+                self._maybe_capture_profile(st, result, seq)
+                sp.set_attribute("rows", rows)
+            sp.set_attribute("status", status)
+            self._record(st, status, t_exec, stmt_id=result.statement_id,
+                         queue_wait_ms=queue_wait_ms, rows=rows,
+                         error=None if err is None else str(err))
+            if err is not None:
+                raise err
+            return out["value"]
 
     def _explain_analyze(self, st: SessionState,
                          inner_sql: str) -> StatementResult:
@@ -1310,7 +1333,7 @@ class Engine:
         return StatementResult("query", df=df)
 
     def _maybe_capture_profile(self, st: SessionState,
-                               result: StatementResult) -> None:
+                               result: StatementResult, seq: int) -> None:
         if not bool(
             st.settings.get("engine.capture_query_profile", self.global_settings)
         ):
@@ -1324,7 +1347,7 @@ class Engine:
         self.query_profiles.append(
             {
                 "session_id": st.session_id,
-                "statement_seq": st.statement_seq,
+                "statement_seq": seq,
                 "query_tag": str(
                     st.settings.get("engine.query_tag", self.global_settings) or ""
                 ),
@@ -1341,52 +1364,21 @@ class Engine:
     def collect_arrow(self, session_id: str, result: StatementResult,
                       timeout: float | None = None):
         """Materialize as a pyarrow Table — the Arrow-stream result path
-        (reference: RecordBatchStream over gRPC,
-        duckdb_statement_batch_reader.cpp:68-85; here ``df.toArrow()``
-        with the same admission/watchdog wrapping as ``collect``)."""
-        st = self._session(session_id)
-        if timeout is None:
-            timeout = float(st.settings.get("engine.query_timeout", self.global_settings) or 0)
-        bypass = bool(st.settings.get("engine.bypass_queue", self.global_settings))
-        if not bypass:
-            self._admission.acquire()
-        st.statement_seq += 1
-        sc = self.spark.sparkContext
-        out: dict[str, Any] = {}
+        of Flight DoGet (reference: RecordBatchStream over gRPC,
+        duckdb_statement_batch_reader.cpp:68-85; here ``df.toArrow()``).
+        Same single lifecycle as ``collect``: after ``execute_sql``'s
+        ``statement.execute`` span, one ``statement.collect`` span
+        covering queue wait plus materialization, one execution row,
+        the same timeout and cancel."""
+        from gizmosql_spark.geo import attach_geoarrow_metadata
 
-        def _run():
-            sc.setJobGroup(st.session_id, f"stmt-{st.statement_seq}", interruptOnCancel=True)
-            try:
-                out["table"] = result.df.toArrow()
-            except Exception as e:
-                out["error"] = e
-
-        try:
-            worker = threading.Thread(target=_run, daemon=True)
-            worker.start()
-            worker.join(timeout if timeout and timeout > 0 else None)
-            if worker.is_alive():
-                sc.cancelJobGroup(st.session_id)
-                worker.join(10)
-                raise StatementTimeout(f"statement exceeded {timeout}s")
-        finally:
-            if not bypass:
-                self._admission.release()
-        if "error" in out:
-            if result.statement_id is not None:
-                self.instr.execution(
-                    result.statement_id, "error", error=str(out["error"]))
-            raise out["error"]
-        if result.statement_id is not None:
-            self.instr.execution(
-                result.statement_id, "success",
-                rows_fetched=out["table"].num_rows)
+        table = self._materialize(
+            self._session(session_id), result, lambda df: df.toArrow(),
+            lambda t: t.num_rows, timeout)
         # GeoArrow export: stamp geometry (WKB) binary columns with
         # extension metadata at the Arrow boundary, like the reference
         # (docs/geometry.md; only binary columns are even inspected)
-        from gizmosql_spark.geo import attach_geoarrow_metadata
-
-        return attach_geoarrow_metadata(out["table"])
+        return attach_geoarrow_metadata(table)
 
     # --- prepared statements (§3.2) -----------------------------------
 

@@ -10,11 +10,17 @@ unix-nano times, attributes, status; ``resourceMetrics`` with sum
 counters) to a JSONL file sink — the HTTP POST is a deploy-time swap
 of ``_emit`` (one seam, same payload).
 
-Span model for the engine: one span per statement
-(``statement.execute``) with child ``statement.collect`` spans
-carrying queue-wait and row counts — matching the reference's
-per-statement tracing. All driver-side control-plane cost; nothing on
-the data path.
+Span model for the engine, matching the reference's per-statement
+tracing: ``execute_sql`` opens one ``statement.execute`` span per
+statement (gates, rewrite, analysis; eager DML/DDL runs inside it).
+Each materialization of a query result, ``Engine.collect`` for rows
+and ``Engine.collect_arrow`` for Flight DoGet alike, then adds one
+child ``statement.collect`` span from the single lifecycle
+(``Engine._materialize``). It covers the admission queue wait plus
+the materialization itself, and carries ``queue_wait_ms``, ``rows``
+and the execution status (success / error / timeout / cancelled).
+Recording spans is driver-side control-plane cost; nothing on the
+data path.
 """
 
 from __future__ import annotations

@@ -122,6 +122,31 @@ def test_unpack_any_rejects_non_flightsql():
     assert fsp.unpack_any(b"\xff\xfe garbage") is None
 
 
+def _assert_truncated_rejected(message: str, buf: bytes) -> None:
+    with pytest.raises(ValueError):
+        fsp.decode(message, buf)
+    assert fsp.unpack_any(fsp.encode(
+        "Any", {"type_url": fsp._TYPE_URL_PREFIX + message,
+                "value": buf})) is None
+
+
+def test_truncated_unknown_length_delimited_field_rejected():
+    # unknown field 9 (tag 0x4A) claims 50 bytes, carries 2
+    good = fsp.encode("CommandStatementQuery", {"query": "SELECT 1"})
+    _assert_truncated_rejected("CommandStatementQuery", good + b"\x4a\x32ab")
+
+
+def test_truncated_unknown_fixed64_field_rejected():
+    # unknown field 9, wire type 1 (tag 0x49), 3 of its 8 bytes
+    good = fsp.encode("CommandStatementQuery", {"query": "SELECT 1"})
+    _assert_truncated_rejected("CommandStatementQuery", good + b"\x49abc")
+
+
+def test_truncated_double_rejected():
+    # double_value field 4 (tag 0x21), 4 of its 8 bytes
+    _assert_truncated_rejected("SessionOptionValue", b"\x21\x00\x00\xf8\x3f")
+
+
 def test_roundtrip_every_message():
     samples = {
         "CommandStatementQuery": {"query": "SELECT 1",

@@ -171,3 +171,63 @@ def test_admission_stats_table_function(engine):
         engine.execute_sql(
             sid, "SET GLOBAL engine.max_concurrent_statements = 0")
         engine.close_session(sid)
+
+
+#: far longer than any timeout or cancel below; range() codegen polls
+#: for task interruption, so a cancelled job stops promptly
+_LONG_QUERY = "SELECT max(id) AS m FROM range(0, 100000000000, 1, 4)"
+
+
+@pytest.mark.parametrize("method", ["collect", "collect_arrow"])
+def test_timeout_and_cancel_release_admission(engine, method):
+    """Both materialize paths map a watchdog timeout and a client
+    cancel to their own error and execution status, and give back the
+    admission slot."""
+    import threading
+
+    from gizmosql_spark.engine import StatementCancelled, StatementTimeout
+
+    materialize = getattr(engine, method)
+    sid = engine.create_session(role="admin")
+    engine.execute_sql(sid, "SET GLOBAL engine.max_concurrent_statements = 2")
+
+    def status_of(res):
+        return [e[2] for e in engine.instr.executions
+                if e[1] == res.statement_id]
+
+    try:
+        engine.execute_sql(sid, "SET engine.query_timeout = 1")
+        res = engine.execute_sql(sid, _LONG_QUERY)
+        with pytest.raises(StatementTimeout):
+            materialize(sid, res)
+        assert status_of(res) == ["timeout"]
+
+        engine.execute_sql(sid, "SET engine.query_timeout = 0")
+        res = engine.execute_sql(sid, _LONG_QUERY)
+        done = threading.Event()
+
+        def cancel_until_done():
+            # keep cancelling until the statement ends, so a cancel that
+            # lands before the job starts cannot leave it running
+            while not done.wait(0.5):
+                engine.cancel(sid)
+
+        canceller = threading.Thread(target=cancel_until_done, daemon=True)
+        canceller.start()
+        try:
+            with pytest.raises(StatementCancelled):
+                materialize(sid, res)
+        finally:
+            done.set()
+            canceller.join(5)
+        assert not canceller.is_alive()
+        assert status_of(res) == ["cancelled"]
+
+        stats = engine.collect(sid, engine.execute_sql(
+            sid, "SELECT * FROM engine_admission_stats()"))[0]
+        assert stats["executing"] == 0
+        assert stats["total_admitted"] >= 2
+    finally:
+        engine.execute_sql(
+            sid, "SET GLOBAL engine.max_concurrent_statements = 0")
+        engine.close_session(sid)

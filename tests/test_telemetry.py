@@ -88,3 +88,36 @@ def test_engine_statement_tracing(spark, tmp_path):
     # sink has one line per span
     lines = open(eng.telemetry.path).read().strip().splitlines()
     assert len(lines) == len(eng.telemetry.spans())
+
+
+def test_collect_and_collect_arrow_lifecycle_parity(spark):
+    """The rows path and the DoGet Arrow path record the same
+    execution row and the same statement.collect span, which brackets
+    queue wait plus materialization."""
+    eng = Engine(spark=spark)
+    sid = eng.create_session(role="admin")
+    sql = "SELECT id, id * 2 AS twice FROM range(1000)"
+    executions = {}
+    try:
+        for method in ("collect", "collect_arrow"):
+            res = eng.execute_sql(sid, sql)
+            getattr(eng, method)(sid, res)
+            rows = [e for e in eng.instr.executions
+                    if e[1] == res.statement_id]
+            assert len(rows) == 1
+            _, _, status, queue_wait_ms, duration_ms, fetched = rows[0][:6]
+            assert status == "success"
+            assert queue_wait_ms >= 0 and duration_ms > 0
+            executions[method] = fetched
+            colls = [s for s in eng.telemetry.spans()
+                     if s.name == "statement.collect"
+                     and s.parent_id == res.root_span_id]
+            assert len(colls) == 1
+            span = colls[0]
+            assert span.trace_id == res.trace_id
+            span_ms = (span.end_ns - span.start_ns) / 1e6
+            assert span_ms >= duration_ms - 1.0
+            assert span.attributes["rows"] == fetched
+        assert executions["collect"] == executions["collect_arrow"] == 1000
+    finally:
+        eng.close_session(sid)

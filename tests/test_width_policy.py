@@ -19,8 +19,11 @@ SMALL = "/root/testdata/sf0.1"
 @pytest.fixture()
 def clone(spark):
     """A fresh conf-isolated session so width mutations never leak
-    into the shared test session."""
+    into the shared test session. Its launch width is pinned above
+    SMALL_SHUFFLE_PARTITIONS, so narrowing is observable whatever the
+    host's core count."""
     s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "32")
     yield s
     loader._WIDTH_STATE.pop(s, None)
 
