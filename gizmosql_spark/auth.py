@@ -10,6 +10,17 @@ The flow matches §3.1 step 1: a client authenticates once with basic
 credentials, receives a signed token carrying username/role/catalog
 ACL claims, and presents that token on session creation; the engine
 trusts only the signature, never client-asserted roles.
+
+Stock Flight SQL clients resend Basic credentials on every RPC, so
+``UserRegistry`` runs the full 100k-iteration PBKDF2 check only for a
+(user, password) pair it has not verified yet. After a success it
+keeps one entry per user: HMAC-SHA256, under a random key drawn when
+the registry is created, of (stored hash ‖ presented password). A
+later call whose keyed digest matches is accepted without PBKDF2; any
+mismatch falls through to the full check, so a failed guess still
+pays the full cost. ``add_user`` drops the entry, and since the stored
+hash (salt included) is part of the digest, a changed password never
+matches an old entry. No plaintext is kept.
 """
 
 from __future__ import annotations
@@ -228,10 +239,22 @@ class UserRegistry:
     The reference loads basic credentials from flags/env and maps them
     to roles (gizmosql_library.cpp); Enterprise carries per-catalog
     read/write ACLs in JWT claims
-    (catalog_permissions_handler.cpp)."""
+    (catalog_permissions_handler.cpp).
+
+    Verification rule: ``authenticate`` keeps, per user, the
+    HMAC-SHA256 of (stored hash ‖ password) under this registry's
+    random key, written only after a full PBKDF2 check succeeded. A
+    call whose digest matches skips PBKDF2; any other call runs it, so
+    wrong passwords pay the full 100k iterations. ``add_user`` drops
+    the user's entry, and the stored hash in the digest keeps an entry
+    from matching once the password changes. Entries never hold the
+    password and never outlive the registry."""
 
     def __init__(self) -> None:
         self._users: dict[str, tuple[str, str, dict]] = {}
+        #: username -> keyed digest of the last verified credential
+        self._verified: dict[str, bytes] = {}
+        self._key = os.urandom(32)
 
     def add_user(
         self,
@@ -247,10 +270,19 @@ class UserRegistry:
         if write_catalogs is not None:
             claims["write_catalogs"] = write_catalogs
         self._users[username] = (hash_password(password), role, claims)
+        self._verified.pop(username, None)
 
     def authenticate(self, secret: str, username: str, password: str) -> str:
         entry = self._users.get(username)
-        if entry is None or not verify_password(password, entry[0]):
+        if entry is None:
             raise AuthError("invalid credentials")
         pw_hash, role, claims = entry
+        digest = hmac.new(
+            self._key, (pw_hash + password).encode(), hashlib.sha256
+        ).digest()
+        known = self._verified.get(username)
+        if known is None or not hmac.compare_digest(known, digest):
+            if not verify_password(password, pw_hash):
+                raise AuthError("invalid credentials")
+            self._verified[username] = digest
         return mint_token(secret, username, role, extra_claims=claims)

@@ -90,6 +90,9 @@ class PreparedStatement:
     #: markers (the form stock Flight SQL clients send) rather than
     #: named :params; binding is then by column position.
     positional: bool = False
+    #: parameters bound by DoPut(CommandPreparedStatementQuery); they
+    #: live and die with the statement (close or session end)
+    bound_params: dict[str, Any] | None = None
 
 
 @dataclass
@@ -1402,9 +1405,9 @@ class Engine:
                          params: dict[str, Any] | list | None = None,
                          ) -> StatementResult:
         st = self._session(session_id)
-        ps = st.prepared.get(handle)
-        if ps is None:
-            raise KeyError(f"no such prepared statement: {handle}")
+        ps = self._prepared(st, handle)
+        if params is None:
+            params = ps.bound_params
         if ps.positional:
             # `?` markers bind by position (Spark takes a list). A
             # stock client's parameter batch carries arbitrary column
@@ -1422,6 +1425,19 @@ class Engine:
         if ps.schema is None:
             ps.schema = df.schema
         return StatementResult("query", df=df)
+
+    @staticmethod
+    def _prepared(st: SessionState, handle: str) -> PreparedStatement:
+        ps = st.prepared.get(handle)
+        if ps is None:
+            raise KeyError(f"no such prepared statement: {handle}")
+        return ps
+
+    def bind_prepared(self, session_id: str, handle: str,
+                      params: dict[str, Any]) -> None:
+        """Bind parameters for later executions that pass none (the
+        Flight SQL DoPut bind, duckdb_server.cpp:747-772)."""
+        self._prepared(self._session(session_id), handle).bound_params = params
 
     def close_prepared(self, session_id: str, handle: str) -> None:
         self._session(session_id).prepared.pop(handle, None)

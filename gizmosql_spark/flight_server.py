@@ -28,7 +28,11 @@ This module re-expresses that surface on ``pyarrow.flight``:
 - **Auth middleware**: ``authorization: Basic ...`` mints a signed
   bearer token (returned in the response headers, the reference's
   mint-on-first-auth flow); ``authorization: Bearer ...`` verifies and
-  carries role + catalog-ACL claims into the session.
+  carries role + catalog-ACL claims into the session. Stock clients
+  resend Basic on every RPC; ``auth.UserRegistry`` runs the full
+  PBKDF2 check once per principal and then accepts the same
+  credential by a keyed digest, while a wrong password still pays the
+  full check (see ``auth``).
 
 The server speaks BOTH command dialects on every verb:
 
@@ -195,8 +199,6 @@ class FlightEngineServer(flight.FlightServerBase):
         #: protobuf-tier implicit sessions: principal key -> session id
         self._implicit_sessions: dict[str, str] = {}
         self._implicit_lock = threading.Lock()
-        #: parameters bound via DoPut(CommandPreparedStatementQuery)
-        self._bound_params: dict[tuple[str, str], dict[str, Any]] = {}
 
     # --- helpers ------------------------------------------------------
 
@@ -419,13 +421,11 @@ class FlightEngineServer(flight.FlightServerBase):
                 result = self._wrap_errors(
                     self.engine.execute_sql, sid, cmd["sql"])
             else:
-                params = cmd.get("parameters")
-                if params is None and proto:
-                    # bound earlier via DoPut(CommandPreparedStatementQuery)
-                    params = self._bound_params.get((sid, cmd["handle"]))
+                # no parameters in the command: the engine uses those
+                # bound by DoPut(CommandPreparedStatementQuery)
                 result = self._wrap_errors(
                     self.engine.execute_prepared, sid, cmd["handle"],
-                    params or {})
+                    cmd.get("parameters"))
             if result.df is None:
                 # DML/SET through the query verb: surface the count as
                 # a 1-row frame, like the reference's update results
@@ -553,8 +553,9 @@ class FlightEngineServer(flight.FlightServerBase):
             # bind parameters: one Arrow batch, column-per-parameter
             # (the reference binds each cell as a string the engine
             # re-casts, duckdb_server.cpp:747-772)
-            params = self._read_params(reader)
-            self._bound_params[(sid, cmd["handle"])] = params
+            self._wrap_errors(
+                self.engine.bind_prepared, sid, cmd["handle"],
+                self._read_params(reader))
             writer.write(fsp.encode(
                 "DoPutPreparedStatementResult",
                 {"prepared_statement_handle": cmd["handle"].encode()}))
@@ -724,7 +725,6 @@ class FlightEngineServer(flight.FlightServerBase):
         if name == "ClosePreparedStatement":
             handle = body["prepared_statement_handle"].decode("utf-8")
             self.engine.close_prepared(sid, handle)
-            self._bound_params.pop((sid, handle), None)
             return iter([])
         if name == "BeginTransaction":
             txn = self._wrap_errors(self.engine.begin_transaction, sid)

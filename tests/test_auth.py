@@ -32,6 +32,140 @@ def test_password_hash_roundtrip():
     assert not auth.verify_password("wrong", h)
 
 
+@pytest.fixture
+def pbkdf2_calls(monkeypatch):
+    """Counts full PBKDF2 checks (``auth.verify_password`` calls)."""
+    calls: list[str] = []
+    real = auth.verify_password
+
+    def counting(password, stored):
+        calls.append(stored)
+        return real(password, stored)
+
+    monkeypatch.setattr(auth, "verify_password", counting)
+    return calls
+
+
+def test_repeat_credential_runs_pbkdf2_once(pbkdf2_calls):
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "pw-1", role="admin")
+    for _ in range(5):
+        claims = auth.verify_token("k", reg.authenticate("k", "dana", "pw-1"))
+        assert claims["sub"] == "dana" and claims["role"] == "admin"
+    assert len(pbkdf2_calls) == 1
+
+
+def test_wrong_password_after_success_pays_full_check(pbkdf2_calls):
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "pw-1")
+    reg.authenticate("k", "dana", "pw-1")
+    for n in (2, 3):
+        with pytest.raises(auth.AuthError):
+            reg.authenticate("k", "dana", "pw-2")
+        assert len(pbkdf2_calls) == n
+    # the failed guesses did not disturb the verified entry
+    reg.authenticate("k", "dana", "pw-1")
+    assert len(pbkdf2_calls) == 3
+
+
+def test_password_change_invalidates_verified_entry(pbkdf2_calls):
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "old-pw")
+    reg.authenticate("k", "dana", "old-pw")
+    reg.add_user("dana", "new-pw")
+    with pytest.raises(auth.AuthError):
+        reg.authenticate("k", "dana", "old-pw")
+    assert len(pbkdf2_calls) == 2
+    reg.authenticate("k", "dana", "new-pw")
+    reg.authenticate("k", "dana", "new-pw")
+    assert len(pbkdf2_calls) == 3
+
+
+def test_stale_entry_never_matches_a_new_hash(pbkdf2_calls):
+    """An entry written against the old hash (a verify racing a
+    password change) cannot accept the old password afterwards."""
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "old-pw")
+    reg.authenticate("k", "dana", "old-pw")
+    stale = reg._verified["dana"]
+    reg.add_user("dana", "new-pw")
+    reg._verified["dana"] = stale
+    with pytest.raises(auth.AuthError):
+        reg.authenticate("k", "dana", "old-pw")
+    assert len(pbkdf2_calls) == 2
+
+
+def test_password_change_under_concurrent_logins(monkeypatch):
+    """Once ``add_user`` has returned with a new password, no login
+    that starts afterwards accepts the old one, however the change
+    interleaves with concurrent verifications."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(auth, "_PBKDF2_ITERS", 1)
+    reg = auth.UserRegistry()
+    violations: list[int] = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for rnd in range(20):
+            old, new = f"pw-{rnd}", f"pw-{rnd + 1}"
+            reg.add_user("dana", old)
+            changed, stop = threading.Event(), threading.Event()
+
+            def login(old=old, changed=changed, stop=stop):
+                while not stop.is_set():
+                    after = changed.is_set()
+                    try:
+                        reg.authenticate("k", "dana", old)
+                    except auth.AuthError:
+                        continue
+                    if after:
+                        violations.append(rnd)
+
+            workers = [threading.Thread(target=login) for _ in range(8)]
+            for w in workers:
+                w.start()
+            reg.add_user("dana", new)
+            changed.set()
+            stop.wait(0.02)
+            stop.set()
+            for w in workers:
+                w.join(timeout=10)
+            assert not any(w.is_alive() for w in workers)
+    finally:
+        sys.setswitchinterval(switch)
+    assert violations == []
+
+
+def test_unknown_user_rejected_despite_verified_password():
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "pw-1")
+    reg.authenticate("k", "dana", "pw-1")
+    with pytest.raises(auth.AuthError):
+        reg.authenticate("k", "nobody", "pw-1")
+
+
+def test_registries_share_no_verified_entry(pbkdf2_calls):
+    first, second = auth.UserRegistry(), auth.UserRegistry()
+    for reg in (first, second):
+        reg.add_user("dana", "pw-1")
+    first.authenticate("k", "dana", "pw-1")
+    assert second._verified == {}
+    second.authenticate("k", "dana", "pw-1")
+    assert len(pbkdf2_calls) == 2
+
+
+def test_registry_keeps_no_plaintext_password():
+    reg = auth.UserRegistry()
+    reg.add_user("dana", "plain-text-pw")
+    reg.authenticate("k", "dana", "plain-text-pw")
+    held = repr(vars(reg)).encode() + b"".join(reg._verified.values())
+    assert reg._verified
+    assert b"plain-text-pw" not in held
+    assert "plain-text-pw".encode().hex().encode() not in held
+
+
 def test_token_mint_and_verify():
     tok = auth.mint_token("k", "u", "admin", extra_claims={"read_catalogs": ["a"]})
     claims = auth.verify_token("k", tok)

@@ -19,6 +19,7 @@ Two layers:
 from __future__ import annotations
 
 import base64
+import json
 import os
 
 import pyarrow as pa
@@ -214,11 +215,15 @@ def client(server):
     cl.close()
 
 
-@pytest.fixture(scope="module")
-def opts(client):
-    tok = base64.b64encode(b"admin:secret").decode()
+def _basic(user: str, password: str) -> flight.FlightCallOptions:
+    tok = base64.b64encode(f"{user}:{password}".encode()).decode()
     return flight.FlightCallOptions(headers=[
         (b"authorization", f"Basic {tok}".encode())])
+
+
+@pytest.fixture(scope="module")
+def opts(client):
+    return _basic("admin", "secret")
 
 
 def _query(client, opts, sql: str) -> pa.Table:
@@ -345,6 +350,100 @@ def test_prepared_statement_lifecycle_protobuf(client, opts):
                          {"prepared_statement_handle": handle})),
         options=opts))
     assert res == []
+
+
+def _prepare_and_bind(client, opts, sql: str, params: pa.Table):
+    """CreatePreparedStatement + DoPut bind; returns the descriptor."""
+    res = list(client.do_action(
+        flight.Action(
+            "CreatePreparedStatement",
+            fsp.pack_any("ActionCreatePreparedStatementRequest",
+                         {"query": sql})),
+        options=opts))
+    _, created = fsp.unpack_any(res[0].body.to_pybytes())
+    desc = flight.FlightDescriptor.for_command(
+        fsp.pack_any("CommandPreparedStatementQuery",
+                     {"prepared_statement_handle":
+                      created["prepared_statement_handle"]}))
+    w, r = client.do_put(desc, params.schema, options=opts)
+    w.write_table(params)
+    w.done_writing()
+    r.read()
+    w.close()
+    return desc
+
+
+def test_basic_credential_verified_once_per_principal(
+        client, server, monkeypatch):
+    """A stock client resends Basic on every RPC; the full PBKDF2
+    check runs once for the principal, not once per call."""
+    from gizmosql_spark import auth
+
+    server.engine.add_user("probe", "probe-pw")
+    probe_hash = server.engine.users._users["probe"][0]
+    calls: list[str] = []
+    real = auth.verify_password
+
+    def counting(password, stored):
+        if stored == probe_hash:
+            calls.append(stored)
+        return real(password, stored)
+
+    monkeypatch.setattr(auth, "verify_password", counting)
+    opts = _basic("probe", "probe-pw")
+    tables = []
+    for _ in range(3):
+        desc = _prepare_and_bind(
+            client, opts, "SELECT :x * 2 AS y", pa.table({"x": [21]}))
+        info = client.get_flight_info(desc, options=opts)
+        tables.append(
+            client.do_get(info.endpoints[0].ticket, options=opts).read_all())
+    assert len(calls) == 1
+    assert [t.column("y").to_pylist() for t in tables] == [[42]] * 3
+
+    with pytest.raises(flight.FlightUnauthenticatedError):
+        _query(client, _basic("probe", "wrong-pw"), "SELECT 1 AS one")
+    assert len(calls) == 2
+
+
+def _session_keys(server, sid: str) -> list:
+    """Every key of the server's own per-call state that names sid."""
+    return [key for value in vars(server).values()
+            if isinstance(value, dict)
+            for key in value
+            if key == sid or (isinstance(key, tuple) and sid in key)]
+
+
+@pytest.mark.parametrize("close_by", ["CloseSession", "kill_session"])
+def test_session_end_drops_bound_parameters(client, opts, server, close_by):
+    user = f"binder_{close_by.lower()}"
+    server.engine.add_user(user, "pw")
+    user_opts = _basic(user, "pw")
+    desc = _prepare_and_bind(
+        client, user_opts, "SELECT :x + 1 AS y", pa.table({"x": [1]}))
+    sid = server._implicit_sessions[f"sub:{user}"]
+    st = server.engine.sessions[sid]
+    [ps] = st.prepared.values()
+    assert ps.bound_params is not None
+
+    if close_by == "CloseSession":
+        list(client.do_action(flight.Action("CloseSession", b""),
+                              options=user_opts))
+    else:
+        res = list(client.do_action(
+            flight.Action("create_session", b"{}"), options=opts))
+        admin_sid = json.loads(res[0].body.to_pybytes())["session"]
+        body = json.dumps({"session": admin_sid, "target": sid}).encode()
+        res = list(client.do_action(
+            flight.Action("kill_session", body), options=opts))
+        assert json.loads(res[0].body.to_pybytes())["killed"] is True
+
+    assert sid not in server.engine.sessions
+    assert st.prepared == {}
+    assert _session_keys(server, sid) == []
+    # the handle died with its session: a fresh session cannot run it
+    with pytest.raises(flight.FlightServerError):
+        client.get_flight_info(desc, options=user_opts)
 
 
 def test_transactions_protobuf(client, opts, server):
